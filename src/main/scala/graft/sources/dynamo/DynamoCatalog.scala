@@ -83,6 +83,19 @@ class DynamoCatalog extends TableCatalog with FunctionCatalog
   private def schemaPath(table: String) =
     java.nio.file.Paths.get(root, table, "schema.json")
 
+  /** Publish a table's schema with one atomic rename: `loadAt` reads
+    * the file without the ALTER lock, and an in-place rewrite would
+    * let it see a truncated file.
+    */
+  private def writeSchema(table: String, schema: StructType): Unit = {
+    val sp = schemaPath(table)
+    val tmp = java.nio.file.Files.createTempFile(sp.getParent, ".schema.json.", ".tmp")
+    java.nio.file.Files.writeString(tmp, schema.json)
+    java.nio.file.Files.move(tmp, sp,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   override def loadTable(ident: Identifier): Table = loadAt(ident, None)
 
   /** SQL time travel over the WAL journal (the `asOfSeq` read option
@@ -158,7 +171,7 @@ class DynamoCatalog extends TableCatalog with FunctionCatalog
       rangeKey = rangeKey,
       shards = bucketShards.orElse(Option(props.get("shards")).map(_.toInt)).getOrElse(16),
       throughput = Option(props.get("throughput")).map(_.toLong).getOrElse(100L)))
-    java.nio.file.Files.writeString(schemaPath(ident.name()), schema.json)
+    writeSchema(ident.name(), schema)
     new DynamoTable(tableOpts(ident.name()), schema, acceptAnySchema = false)
   }
 
@@ -231,7 +244,7 @@ class DynamoCatalog extends TableCatalog with FunctionCatalog
               s"ALTER TABLE change ${other.getClass.getSimpleName} is not supported " +
                 "(renames and type changes would require rewriting stored items)")
           }
-          java.nio.file.Files.writeString(sp, updated.json)
+          writeSchema(ident.name(), updated)
           new DynamoTable(tableOpts(ident.name()), updated, acceptAnySchema = false)
         } finally fileLock.release()
       } finally ch.close()

@@ -1587,12 +1587,7 @@ final class DynamoScan(
     // window's sub-shard skip is NOT credited (pages are a reader
     // decision), which keeps the estimate an over-approximation.
     private val surviving: Option[Set[Int]] =
-      if (opts.indexName.isDefined) None
-      else (keyShards(store, statsMeta), zoneShards(store, statsMeta)) match {
-        case (Some(a), Some(b)) => Some(a.intersect(b))
-        case (Some(a), None)    => Some(a)
-        case (None, z)          => z
-      }
+      if (opts.indexName.isDefined) None else candidateShards(store, statsMeta)
     private val bytes = {
       val raw = surviving match {
         case Some(keep) => store.sizeBytesShards(opts.tableName, keep)
@@ -1618,12 +1613,12 @@ final class DynamoScan(
           opts.ttlAttribute.isEmpty && opts.asOfSeq.isEmpty &&
           opts.indexName.isEmpty && store.journalEmpty(opts.tableName)) {
         val meta = statsMeta
-        val per = store.tableZoneStats(opts.tableName, meta.shards)
         // Under shard pruning, sum only the surviving shards' exact
         // counters — still an over-approximation of the filtered
         // output (residual filters shrink it further), but tighter by
         // the pruned fraction.
         val keep = surviving.getOrElse((0 until meta.shards).toSet)
+        val per = store.tableZoneStats(opts.tableName, keep)
         if (keep.forall(sh => sh >= 0 && sh < meta.shards &&
             per(sh).exists(_.items.isDefined)))
           Some(keep.toSeq.map(sh => per(sh).get.items.get).sum)
@@ -1660,8 +1655,8 @@ final class DynamoScan(
       // Same kept-shard subset as `rows` — mixing all-shard attr
       // stats with a pruned row total would yield nullCount > rows.
       val keep = surviving.getOrElse((0 until meta.shards).toSet)
-      val per = store.tableZoneStats(opts.tableName, meta.shards)
-        .zipWithIndex.collect { case (s, i) if keep(i) => s }.flatten
+      val perKept = store.tableZoneStats(opts.tableName, keep)
+      val per = keep.toSeq.sorted.flatMap(perKept(_))
       def cvt(dt: DataType, v: BigDecimal, whole: Boolean): Option[Object] = dt match {
         case LongType if whole && v.isValidLong => Some(java.lang.Long.valueOf(v.toLong))
         case IntegerType if whole && v.isValidInt => Some(java.lang.Integer.valueOf(v.toInt))
@@ -2123,15 +2118,9 @@ final class DynamoScan(
         }
       }
     }
-    // Key pruning and zone-map pruning compose by intersection: both
-    // produce "shards that could hold a qualifying item", both plan
+    // Key-first pruning: zone maps fold only over the key survivors,
     // one partition per surviving shard in the full shard space.
-    val candidateShards: Option[Set[Int]] = (keyShards(store, meta), zoneShards(store, meta)) match {
-      case (Some(a), Some(b)) => Some(a.intersect(b))
-      case (Some(a), None)    => Some(a)
-      case (None, zoned)      => zoned
-    }
-    candidateShards match {
+    candidateShards(store, meta) match {
       case Some(shards) =>
         val rate = math.max(0.1, opts.targetCapacity * throughput / math.max(1, shards.size))
         // One partition per candidate shard; segment space = shard space.
@@ -2171,35 +2160,33 @@ final class DynamoScan(
     }
   }
 
-  /** Zone-map pruning: shards whose folded [[ShardStats]] leave a
-    * pushed conjunct possibly-true; `None` = nothing pruned (no
-    * applicable predicate, stats unavailable, or every shard
-    * survives — the plan then keeps its normal full-scan
-    * segmentation). Sound because every stats record over-approximates
-    * the live values and [[ZoneMap.mayMatch]] only prunes predicates
-    * whose truth REQUIRES an in-range stored value. Skipped for GSI
-    * views (the scan filter references index-projected attrs but the
-    * stats describe base items — same attrs, same values, yet the
-    * sparse-index skip means absence semantics differ; conservative)
-    * and under `zonePruning=false`.
+  /** The base shards a scan must plan, key-first: [[keyShards]]
+    * resolves the key pins, then zone-map pruning folds the
+    * [[ShardStats]] of ONLY the key survivors (every shard when no key
+    * is pinned) and drops shards whose map leaves a pushed conjunct
+    * impossible. The result is `keyed ∩ zoned`, the same set as
+    * folding every shard, at O(pinned shards + their journal files).
+    * `None` = nothing pruned: no pin and every shard survives, so the
+    * plan keeps its full-scan segmentation. Zone pruning is sound
+    * because every stats record over-approximates the live values and
+    * [[ZoneMap.mayMatch]] only prunes predicates whose truth REQUIRES
+    * an in-range stored value. It is skipped under `zonePruning=false`
+    * and for GSI views: base stats say nothing about a GSI's shards,
+    * but a LOCAL index reads the base partitions themselves (the
+    * sparse rule only REMOVES rows), so it keeps the pruning.
     */
-  private def zoneShards(store: LocalKVStore, meta: TableMeta): Option[Set[Int]] = {
-    // Index reads: base zone stats say nothing about a GSI's shards,
-    // but a LOCAL index reads the base partitions themselves (same
-    // items, same attributes — the sparse rule only REMOVES rows), so
-    // base-shard zone pruning stays sound for it.
-    if (opts.indexName.exists(ix => !meta.indexes.get(ix).exists(_.local)) ||
-        !opts.zonePruning) return None
+  private def candidateShards(store: LocalKVStore, meta: TableMeta): Option[Set[Int]] = {
+    val keyed = keyShards(store, meta)
+    val cands = keyed.getOrElse((0 until meta.shards).toSet)
     val conjuncts = pushed ++ runtime
-    if (conjuncts.isEmpty) return None
-    val stats = store.tableZoneStats(opts.tableName, meta.shards)
-    val surviving = (0 until meta.shards).filter { sh =>
-      stats(sh) match {
-        case Some(st) => conjuncts.forall(ZoneMap.mayMatch(_, st))
-        case None     => true
+    val live =
+      if (opts.indexName.exists(ix => !meta.indexes.get(ix).exists(_.local)) ||
+          !opts.zonePruning || conjuncts.isEmpty) cands
+      else {
+        val stats = store.tableZoneStats(opts.tableName, cands)
+        cands.filter(sh => stats(sh).forall(st => conjuncts.forall(ZoneMap.mayMatch(_, st))))
       }
-    }.toSet
-    if (surviving.size < meta.shards) Some(surviving) else None
+    if (keyed.isDefined || live.size < meta.shards) Some(live) else None
   }
 
   /** The aggregate answer over the CLEAN shards plus the dirty-shard
@@ -2230,11 +2217,12 @@ final class DynamoScan(
       meta: TableMeta): Option[(Seq[Option[AttrVal]], Set[Int])] = {
     val dirty = store.journalShards(opts.tableName)
     if (dirty.contains(LocalKVStore.TxnShard)) return None
-    val perShard = store.tableZoneStats(opts.tableName, meta.shards)
+    val clean = (0 until meta.shards).filterNot(dirty)
+    val perShard = store.tableZoneStats(opts.tableName, clean)
     val scanSet = scala.collection.mutable.Set.empty[Int] ++ dirty
     var folded = ShardStats.empty
-    (0 until meta.shards).foreach { sh =>
-      if (!scanSet(sh)) perShard(sh) match {
+    clean.foreach { sh =>
+      perShard(sh) match {
         case Some(st) => folded = folded.union(st)
         case None => scanSet += sh // unreadable sidecar: just scan it
       }

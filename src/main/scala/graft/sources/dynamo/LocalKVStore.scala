@@ -297,8 +297,10 @@ final case class ShardStats(attrs: Map[String, AttrStats], complete: Boolean,
       }
     counted.copy(items = counted.items.map(_ + 1L))
   }
+  // iterator, not a Set of pairs: hashing the pairs would hash every
+  // attr's HLL registers on each fold
   def union(o: ShardStats): ShardStats = ShardStats(
-    (attrs.keySet ++ o.attrs.keySet).map(a =>
+    (attrs.keySet ++ o.attrs.keySet).iterator.map(a =>
       a -> attrs.getOrElse(a, AttrStats.empty)
         .union(o.attrs.getOrElse(a, AttrStats.empty))).toMap,
     complete && o.complete,
@@ -577,8 +579,8 @@ final class LocalKVStore(root: String) {
     */
   def viewVersion(table: String): String = {
     val pubs = listFiles(table, "wal-").map(walPubSeq)
-    val mx = (pubs :+ compactionWatermark(table)).max
-    s"$mx:${pubs.size}:${compactionWatermark(table)}"
+    val wm = compactionWatermark(table)
+    s"${(pubs :+ wm).max}:${pubs.size}:$wm"
   }
 
   def indexShardOf(meta: TableMeta, hashVal: AttrVal): Int =
@@ -3816,10 +3818,22 @@ final class LocalKVStore(root: String) {
     * over-approximates the merged view (deletes/TTL narrow only at
     * compaction, which rewrites the base stats exactly), so
     * "predicate excludes the stats range" implies "predicate excludes
-    * every item in the shard". ONE directory pass per call — the
-    * planner consults all shards at once.
+    * every item in the shard". This all-shards form serves whole-table
+    * folds (catalog stats); the planner uses the subset form below.
     */
   def tableZoneStats(table: String, shards: Int): IndexedSeq[Option[ShardStats]] = {
+    val per = tableZoneStats(table, 0 until shards)
+    (0 until shards).map(per)
+  }
+
+  /** [[tableZoneStats]] for the `only` shards: one directory pass, and
+    * no sidecar of any other shard is read. A key-pinned scan folds
+    * just its pinned shards' base and journal stats, so planning costs
+    * O(pinned shards + their journal files), not O(table + journal).
+    * Each shard's map is the same as in the all-shards form —
+    * transaction files still widen every requested shard.
+    */
+  def tableZoneStats(table: String, only: Iterable[Int]): Map[Int, Option[ShardStats]] = {
     val dir = tableDir(table)
     def read(p: Path): Option[ShardStats] =
       try Some(ShardStats.fromJson(new String(Files.readAllBytes(p), UTF_8)))
@@ -3832,19 +3846,19 @@ final class LocalKVStore(root: String) {
     // transaction files (-sall) can hold items of ANY shard — their
     // stats widen every shard's map (over-approximate, sound)
     val txnStats = walByShard.getOrElse(LocalKVStore.TxnShard, Seq.empty).map(statOf)
-    (0 until shards).map { shard =>
+    only.iterator.map { shard =>
       val base: Option[ShardStats] =
         if (Files.isRegularFile(dir.resolve(f"shard-$shard%03d.jsonl")))
           read(dir.resolve(f"zstat-shard-s$shard%03d.json"))
         else Some(ShardStats.empty) // no base file = no base items
       val walStats = walByShard.getOrElse(shard, Seq.empty).map(statOf)
       val pieces = (base +: walStats) ++ txnStats
-      if (pieces.exists(_.isEmpty)) None
+      shard -> (if (pieces.exists(_.isEmpty)) None
       else {
         val folded = pieces.flatten.reduce(_.union(_))
         if (folded.complete) Some(folded) else None
-      }
-    }
+      })
+    }.toMap
   }
 
   // ---- resharding (layout change; see DynamoMaintenance.reshard) ----
@@ -4061,12 +4075,20 @@ object LocalKVStore {
 
   /** [[LocalKVStore.samplePageCached]]'s backing map:
     * (root, table, asOfSeq) → (viewVersion at sampling time, sample).
-    * One entry per distinct table a JVM touches (the sample is the
-    * inference page, ≤ ~1 MB of parsed items); a new version REPLACES
-    * the entry, so the map never grows with mutation history.
+    * A new version REPLACES its key's entry, and the map is an LRU of
+    * [[sampleCacheCapacity]] entries (each sample is the inference
+    * page, ≤ ~1 MB of parsed items), so neither mutation history nor a
+    * stream of distinct `asOfSeq` snapshot reads grows it unbounded.
     */
-  private val sampleCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Option[Long]), (String, Seq[Item])]
+  private[graft] val sampleCacheCapacity = 16
+  private type SampleKey = (String, String, Option[Long])
+  private[graft] val sampleCache: java.util.Map[SampleKey, (String, Seq[Item])] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[SampleKey, (String, Seq[Item])](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[SampleKey, (String, Seq[Item])]): Boolean =
+          size() > sampleCacheCapacity
+      })
 
   /** True for the value types DynamoDB accepts as KEY attributes
     * (S/N/B). Index visibility and shard placement consult this —

@@ -447,6 +447,68 @@ class PushdownLawsSpec extends AnyFunSuite {
     }
   }
 
+  test("key-first shard pruning plans keyShards ∩ zone survivors on random journaled tables") {
+    // The planner folds zone maps only over the key-pinned shards; the
+    // planned set must equal the all-shards formula (key pins
+    // intersected with every shard's zone survivors), and the rows
+    // must equal the zonePruning=false read, with journal files
+    // pending on several shards.
+    import spark.implicits._
+    import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, In, LessThanOrEqual}
+    import graft.sources.dynamo.{AttrVal, DynamoInputPartition, DynamoOptions,
+      DynamoScan, LocalKVStore, TableMeta, ZoneMap}
+    def draw[T](g: Gen[T], n: Int, seed: Long): Seq[T] =
+      Gen.listOfN(n, g).apply(Gen.Parameters.default, Seed(seed)).get
+    val genN = Gen.choose(-100L, 100L)
+    val genKey: Gen[Seq[Long]] = Gen.oneOf(
+      Gen.choose(0L, 39L).map(Seq(_)), Gen.pick(3, 0L until 40L).map(_.toSeq))
+    val genRange: Gen[Filter] = Gen.oneOf(
+      genN.map(v => GreaterThan("n", v)), genN.map(v => LessThanOrEqual("n", v)))
+    var zonePruned = 0
+    (0 until 10).foreach { it =>
+      val root = Files.createTempDirectory("graft-keyfirst-law").toString
+      val store = new LocalKVStore(root)
+      store.bulkLoad("t", TableMeta("id", None, shards = 8, throughput = 1000L),
+        draw(genN, 30, it).zipWithIndex.iterator.map { case (n, i) =>
+          Map("id" -> (AttrVal.N(i): AttrVal), "n" -> (AttrVal.N(n): AttrVal)) })
+      // three journal rounds of upserts and new keys, several shards each
+      (0 until 3).foreach { round =>
+        draw(Gen.zip(Gen.choose(0L, 39L), genN), 5, 100L * it + round)
+          .toDF("id", "n").write.dynamo(root, "t", "id")
+      }
+      val meta = store.describe("t")
+      assert(store.journalShards("t").size > 1, s"iteration $it: journal on one shard")
+      val schema = spark.read.dynamo(root, "t").schema
+      val opts = DynamoOptions(java.util.Map.of("path", root, "tableName", "t"))
+      val allShards = store.tableZoneStats("t", meta.shards)
+      draw(Gen.zip(genKey, genRange), 8, 1000L + it).foreach { case (ks, range) =>
+        val key: Filter = if (ks.size == 1) EqualTo("id", ks.head) else In("id", ks.toArray[Any])
+        val conjuncts = Seq(key, range)
+        val keyed = ks.map(k => store.shardOf(meta, Map("id" -> AttrVal.N(k)))).toSet
+        val expected = keyed.filter(sh =>
+          allShards(sh).forall(st => conjuncts.forall(ZoneMap.mayMatch(_, st))))
+        if (expected != keyed) zonePruned += 1
+        val planned = new DynamoScan(opts, schema, conjuncts.toArray).toBatch
+          .planInputPartitions()
+          .collect { case p: DynamoInputPartition if !p.padEmpty => p.segment }.toSet
+        assert(planned === expected, s"iteration $it: $key AND $range")
+        val cond = range match {
+          case GreaterThan(_, v)     => col("n") > v
+          case LessThanOrEqual(_, v) => col("n") <= v
+          case other                 => fail(s"unexpected range filter $other")
+        }
+        def rows(zone: Boolean): Seq[(Long, Long)] =
+          spark.read.format("dynamo")
+            .option("path", root).option("tableName", "t")
+            .option("zonePruning", zone.toString).load()
+            .filter(col("id").isin(ks: _*) && cond)
+            .select("id", "n").as[(Long, Long)].collect().toSeq.sorted
+        assert(rows(zone = true) === rows(zone = false), s"iteration $it: $key AND $range")
+      }
+    }
+    assert(zonePruned > 0, "no case pruned a key-pinned shard by its zone map")
+  }
+
   test("NOT over a nullable attribute is pushed and still matches SQL semantics") {
     // The canonical three-valued-logic trap: s IS NULL on some rows.
     val p = !(col("s") === "alpha")

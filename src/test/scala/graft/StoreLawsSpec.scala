@@ -2162,4 +2162,22 @@ class StoreLawsSpec extends AnyFunSuite {
       .flatMap(store.indexView(store.describe("t"), ix, _)).toVector
     assert(viaCopy.sortBy(_.toString) === viaBase.sortBy(_.toString))
   }
+
+  test("sample cache stays at its capacity under distinct asOfSeq reads") {
+    // samplePageCached keys on (root, table, asOfSeq): a stream of
+    // snapshot reads at distinct cuts must evict, not accumulate
+    val root = Files.createTempDirectory("graft-sample-lru").toString
+    val store = new LocalKVStore(root)
+    store.bulkLoad("t", TableMeta("id", None, shards = 2, throughput = 1000L),
+      Iterator(Map("id" -> (AttrVal.S("a"): AttrVal), "v" -> (AttrVal.N(1): AttrVal))))
+    val cap = LocalKVStore.sampleCacheCapacity
+    val first = store.compactionWatermark("t") + 1
+    val cuts = (0L until 3L * cap).map(first + _)
+    cuts.foreach { cut =>
+      assert(store.samplePageCached("t", Some(cut)).map(_("id")) === Seq(AttrVal.S("a")))
+      assert(LocalKVStore.sampleCache.size <= cap)
+    }
+    // least-recently-used eviction: the newest cut is still cached
+    assert(LocalKVStore.sampleCache.containsKey((root, "t", Some(cuts.last))))
+  }
 }
