@@ -85,15 +85,18 @@ class DynamoCatalog extends TableCatalog with FunctionCatalog
 
   /** Publish a table's schema with one atomic rename: `loadAt` reads
     * the file without the ALTER lock, and an in-place rewrite would
-    * let it see a truncated file.
+    * let it see a truncated file. The tmp name is unique per write and
+    * created with the umask mode, like the store's other sidecars.
     */
   private def writeSchema(table: String, schema: StructType): Unit = {
     val sp = schemaPath(table)
-    val tmp = java.nio.file.Files.createTempFile(sp.getParent, ".schema.json.", ".tmp")
-    java.nio.file.Files.writeString(tmp, schema.json)
-    java.nio.file.Files.move(tmp, sp,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val tmp = sp.resolveSibling(s".schema.json.${java.util.UUID.randomUUID}.tmp")
+    try {
+      java.nio.file.Files.writeString(tmp, schema.json)
+      java.nio.file.Files.move(tmp, sp,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
   override def loadTable(ident: Identifier): Table = loadAt(ident, None)

@@ -4079,8 +4079,14 @@ object LocalKVStore {
     * [[sampleCacheCapacity]] entries (each sample is the inference
     * page, ≤ ~1 MB of parsed items), so neither mutation history nor a
     * stream of distinct `asOfSeq` snapshot reads grows it unbounded.
+    * The capacity sits well above the working set of a bench run: the
+    * q_dyn keys at sf0.1 touch 22 distinct keys (18 current views in
+    * the shared root, 2 `asOfSeq` cuts, 1 table in each of 2 replica
+    * roots), and [[graft.Bench]] cycles through all of them once
+    * before its timed pass, so an LRU smaller than 22 would miss on
+    * every first load of that pass.
     */
-  private[graft] val sampleCacheCapacity = 16
+  private[graft] val sampleCacheCapacity = 64
   private type SampleKey = (String, String, Option[Long])
   private[graft] val sampleCache: java.util.Map[SampleKey, (String, Seq[Item])] =
     java.util.Collections.synchronizedMap(
